@@ -18,35 +18,81 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // split-size override for local profiling (A/B'd at 4m vs the
-      // 128m default: smaller splits parallelize single-file kernel
-      // scans slightly but cost more on the iterative CC queries, so
-      // the default stands)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", "128m"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** History-tripwire ratio threshold for a row whose checked-in
-    * history is `histPrev` seconds. Multi-second rows get the TIGHT
-    * 1.4x ratio: the r15c sweep measured a host event hiding +142 s
-    * inside the 471 s converged-pagerank row at 1.43x its history —
-    * under the 3x threshold that guards short rows against
-    * timer/first-repeat noise — and r16 shipped an unflagged ~2x
-    * regression on layout_bucketed_join (12.5→24.3 s, history 13.3 s)
-    * precisely because the 1.4x band used to start at 30 s: a
-    * [10 s, 30 s)-history row could double silently. A >=10 s-history
-    * row's run-to-run noise is already percent-scale (these are
-    * multi-second means over fixed work), so 1.4x is signal there
-    * too. A trip's immediate probe still arbitrates: hot probe =>
-    * leg self-reports flagged; clean probe => the trip records as a
-    * regression POINTER (ratio + clean probe) without flagging the
-    * leg — the honest middle ground for evidence the probes cannot
-    * reach. */
-  private[graft] def tripRatioFor(histPrev: Double): Double =
-    if (histPrev >= 10.0) 1.4 else 3.0
+  /** Bench-only rows, beside the catalogue's [[SparkEntry.specs]]: the
+    * production forms benched ALONGSIDE the exact oracle forms, so the
+    * artifact carries a measured curve for both. Never oracle-checked
+    * (Verify runs the exact default-conf forms). */
+  private[graft] val benchOnly: Seq[QuerySpec] = {
+    import graft.operators.{AnnIvfPq, AnnPq, GraphQueries, TextQueries}
+    import graft.sources.BucketedLayout
+    Seq(
+      // the corpus-model forms: fixed-size top-K model tables with
+      // smoothed backoff (the 100 TB shape). Both rebuild their model
+      // inside every repeat (no memo, no scratch table), so
+      // min-over-repeats hides nothing
+      QuerySpec("t_lm_perplexity_pruned", { (s, d) =>
+        s.conf.set("spark.graft.lm.topK", "262144")
+        TextQueries.lmPerplexity(s, d)
+      }, None),
+      QuerySpec("t_quality_classifier_pruned", { (s, d) =>
+        s.conf.set("spark.graft.nb.topK", "262144")
+        TextQueries.qualityClassifier(s, d)
+      }, None),
+      // the amortized side of the pay-once layout trade: runs after the
+      // cold row (alphabetical order), so ensureBucketed serves from the
+      // session memo and this times the exchange-free READ path — the
+      // cost every query after the first pays at 100 TB. Eager for the
+      // warm-up EXCLUSION: constructing it at the bench SF during
+      // warm-up would materialize the copies untimed and rob the cold row
+      QuerySpec("layout_bucketed_join_warm", BucketedLayout.bucketedJoin,
+        None, eagerBuild = true),
+      // the untrained SQL-replayable PQ models (the oracle gate's
+      // forms), kept benched so the artifact still carries both sides'
+      // cost and the recall section both sides' retrieval quality
+      QuerySpec("sim_ivfpq_baseline", AnnIvfPq.ivfPqTopK, None),
+      QuerySpec("sim_pq_adc_baseline", AnnPq.pqAdcTopK, None),
+      // the recall-hungry routing point (nprobe = nlist/4, kf=4 — 0.92
+      // recall where the default breadth plateaus at 0.84 on the
+      // planted fixture), recorded as a row so the recall/cost knee is
+      // measured at the bench SFs. Eager for the warm-up exclusion:
+      // warming it would train the shared -refine model untimed
+      QuerySpec("sim_ivfpq_refine_wide", AnnIvfPq.ivfPqRefineTopKTrainedWide,
+        None, eagerBuild = true, memoFrom = Some("sim_ivfpq_refine")),
+      // the production convergence form beside the fixed-3-iteration
+      // oracle form; iteration count goes to stderr next to the row.
+      // The between-query cleanup has UNPERSISTED the adjacency the
+      // oracle row built (the memo would serve a cache-less frame that
+      // re-scans orders⋈lineitem EVERY iteration) — release it so this
+      // row is a self-contained production run: adjacency build +
+      // persist + iterate-to-ε, all timed. Construction runs the whole
+      // loop (delta probes execute eagerly)
+      QuerySpec("graph_pagerank_converged", { (s, d) =>
+        GraphQueries.releaseAdjacency(s, d)
+        val cr = GraphQueries.pageRankConverged(s, d)
+        System.err.println(s"[bench] pageRankConverged: ${cr.iters} " +
+          s"iterations, converged=${cr.converged} (eps=0.1% of max rank)")
+        cr.ranks
+      }, None, eagerBuild = true))
+  }
+
+  /** Every bench row in sweep order: the catalogue plus [[benchOnly]],
+    * sorted by name. */
+  private[graft] def rows: Seq[QuerySpec] =
+    (SparkEntry.specs ++ benchOnly).sortBy(_.name)
+
+  /** A row's family: its name up to the first '_', with the numbered
+    * TPC-H (q1..q22) and event (e1..e11) rows folded into one family
+    * each. Family boundaries in the alphabetical sweep place the
+    * mid-leg probes. */
+  private def family(n: String): String = {
+    val p = n.takeWhile(_ != '_')
+    if (p.matches("q\\d+")) "q" else if (p.matches("e\\d*")) "e" else p
+  }
 
   def main(args: Array[String]): Unit = {
     // local profiling knobs (driver passes no args): args(0) = comma-
@@ -82,183 +128,7 @@ object Bench {
 
     // warm the JVM + parquet footers once with the flagship query
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
-
-    // scale-bench overrides: oracle-gated entries whose gates pin
-    // parameters to the static sf0.01 oracle (and refuse larger
-    // corpora so a silent divergence can't pass the gate) are benched
-    // through their auto-scaling production forms instead
-    val benchForms: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      Map(
-        "sim_near_dup_lsh" ->
-          ((s, d) => graft.operators.AnnLsh.nearDupLsh(s, d)),
-        "sim_ann_lsh" ->
-          ((s, d) => graft.operators.AnnLsh.annTopKScaled(s, d)),
-        "sim_ann_multiprobe" ->
-          ((s, d) => graft.operators.AnnLsh.annMultiProbeScaled(s, d)),
-        // the oracle form's 6-bit width gate refuses corpora past
-        // 2048 vectors (pinned static SQL); the bench runs the
-        // auto-width production pipeline, like the two entries above
-        "sim_sem_dedup" ->
-          ((s, d) => graft.operators.SemDedup.semDedupScaled(s, d)),
-        // exact-form guards: the _pruned twins below set the topK
-        // confs at construction, which would otherwise leak into the
-        // exact forms on the next sweep/dir — pin them unset here
-        "t_lm_perplexity" -> ((s, d) => {
-          s.conf.unset("spark.graft.lm.topK")
-          graft.operators.TextQueries.lmPerplexity(s, d)
-        }),
-        "t_quality_classifier" -> ((s, d) => {
-          s.conf.unset("spark.graft.nb.topK")
-          graft.operators.TextQueries.qualityClassifier(s, d)
-        }),
-        // r15: the TRAINED codebooks are the benched PQ defaults — the
-        // repo's own planted-cluster recall table showed the untrained
-        // SQL-replayable models losing to their trained siblings 3-5×
-        // (0.06-0.16 vs 0.44-0.76 recall@5 across SFs), an
-        // anti-default. The oracle gate (Verify) still runs the
-        // replayable untrained forms under these names; the untrained
-        // models stay benched as the explicit _baseline rows below.
-        "sim_ivfpq_topk" -> ((s, d) =>
-          graft.operators.AnnIvfPq.ivfPqTopKTrained(s, d)),
-        "sim_ivfpq_refine" -> ((s, d) =>
-          graft.operators.AnnIvfPq.ivfPqRefineTopKTrained(s, d)),
-        "sim_pq_adc_topk" -> ((s, d) =>
-          graft.operators.AnnPq.pqAdcTopKTrained(s, d)))
-
-    // Bench-only rows: the production corpus-model forms (fixed-size
-    // top-K model tables with smoothed backoff — the 100 TB shape)
-    // benched ALONGSIDE the exact oracle forms, so the artifact
-    // carries a measured curve for both. Not part of SparkEntry
-    // .queries (the oracle gate runs the exact default-conf forms).
-    val extraQueries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      Map(
-        "t_lm_perplexity_pruned" -> ((s, d) => {
-          s.conf.set("spark.graft.lm.topK", "262144")
-          graft.operators.TextQueries.lmPerplexity(s, d)
-        }),
-        "t_quality_classifier_pruned" -> ((s, d) => {
-          s.conf.set("spark.graft.nb.topK", "262144")
-          graft.operators.TextQueries.qualityClassifier(s, d)
-        }),
-        // the amortized side of the pay-once layout trade: runs after
-        // the cold row (alphabetical order), so ensureBucketed serves
-        // from the session memo and this times the exchange-free READ
-        // path — the cost every query after the first pays at 100 TB
-        "layout_bucketed_join_warm" -> ((s, d) =>
-          graft.sources.BucketedLayout.bucketedJoin(s, d)),
-        // the untrained SQL-replayable PQ models, demoted to explicit
-        // _baseline rows (the oracle gate's forms; the canonical
-        // sim_ivfpq_topk / sim_pq_adc_topk bench rows run the trained
-        // production models since r15 — see benchForms above) — kept
-        // benched so the artifact still carries both sides' cost and
-        // the recall section both sides' retrieval quality
-        "sim_ivfpq_baseline" -> ((s, d) =>
-          graft.operators.AnnIvfPq.ivfPqTopK(s, d)),
-        // the recall-hungry routing point (nprobe = nlist/4, kf=4 —
-        // 0.92 recall where the default breadth plateaus at 0.84 on
-        // the planted fixture): recorded as a row so the recall/cost
-        // knee is measured at the bench SFs, not just the curve grid
-        "sim_ivfpq_refine_wide" -> ((s, d) =>
-          graft.operators.AnnIvfPq.ivfPqRefineTopKTrainedWide(s, d)),
-        "sim_pq_adc_baseline" -> ((s, d) =>
-          graft.operators.AnnPq.pqAdcTopK(s, d)),
-        // the production convergence form beside the fixed-3-iteration
-        // oracle form; iteration count goes to stderr next to the row.
-        // The between-query cleanup has UNPERSISTED the adjacency the
-        // oracle row built (the memo would serve a cache-less frame
-        // that re-scans orders⋈lineitem EVERY iteration) — release it
-        // so this row is a self-contained production run: adjacency
-        // build + persist + iterate-to-ε, all timed
-        "graph_pagerank_converged" -> ((s, d) => {
-          graft.operators.GraphQueries.releaseAdjacency(s, d)
-          val cr = graft.operators.GraphQueries.pageRankConverged(s, d)
-          System.err.println(s"[bench] pageRankConverged: ${cr.iters} " +
-            s"iterations, converged=${cr.converged} (eps=0.1% of max rank)")
-          cr.ranks
-        }))
-
-    // Queries whose CONSTRUCTION performs real MEMOIZED
-    // model/materialization work: the CC family materializes the
-    // shared cluster-label table (DedupQueries.simhashClusters memo).
-    // Two bench rules keep that honest: (1) they are never warmed at
-    // the bench SF — the work stays inside the timed sweep (for the CC
-    // memo, charged to the family's first query; the other two reuse
-    // it, the sweep semantics the sharing is FOR); (2) with repeats >
-    // 1 they report the FIRST repeat, not the min — a later CC repeat
-    // hits the memo and would report only the parquet-read tail.
-    // NOTE the text-scorer forms (t_lm_perplexity /
-    // t_quality_classifier AND their _pruned twins) are deliberately
-    // NOT here: all four rebuild their corpus model inside every
-    // repeat (the pruned twins re-collect the K-bounded model each
-    // construction — no memo, no scratch table), so min-over-repeats
-    // hides nothing. Listing them here just reported one-time JIT as
-    // if it were query cost (r10 measured the classifier at 9.3 s
-    // first repeat vs 6.4 s steady-state for exactly that reason; the
-    // pruned twins were de-listed in r11 on the same argument).
-    val heavyConstruction =
-      Set("dedup_clusters", "dedup_simhash_pairs", "pipeline_keep",
-        "pipeline_keep_best",
-        // constructing this one MATERIALIZES the bucketed fact-table
-        // copies (the write-side cost the co-location lever trades
-        // for) — it must be paid inside the first timed repeat, not
-        // vanish into the untimed warm-up. The _warm twin is here for
-        // the warm-up EXCLUSION only (constructing it at the bench SF
-        // during warm-up would materialize the copies untimed and rob
-        // the cold row): in the timed sweep it runs after the cold
-        // row, so its first repeat is already the memoized read path
-        // it exists to measure.
-        "layout_bucketed_join", "layout_bucketed_join_warm",
-        // the embedding near-dup pair memo: built by the family's
-        // first timed query, reused by the rest — warming it at the
-        // bench SF would hide the family's dominant cost untimed
-        "sim_near_dup_lsh", "sim_sem_dedup",
-        // the IVF quantizer (count + sample + k-means + centroid
-        // broadcast) is construction-memoized per table version —
-        // the first repeat pays the training, later ones must not
-        // hide it
-        "sim_ann_ivf",
-        // the pagerank adjacency (orders⋈lineitem→distinct, persisted)
-        // is construction-memoized per table version — same rule
-        "graph_pagerank",
-        // CONSTRUCTION runs the whole iterate-to-convergence loop
-        // (delta probes execute eagerly); alphabetical order charges
-        // the shared adjacency memo to graph_pagerank first
-        "graph_pagerank_converged",
-        // Lloyd training (sample collect + coarse & per-subspace
-        // k-means) is construction-memoized — first repeat pays it.
-        // Since r15 these canonical names BENCH the trained models
-        // (benchForms), so the training cost lands here.
-        "sim_ivfpq_topk", "sim_ivfpq_refine", "sim_pq_adc_topk",
-        // here for the warm-up EXCLUSION only (like the _warm layout
-        // row): constructing it at the bench SF during warm-up would
-        // train the shared -refine model untimed and rob
-        // sim_ivfpq_refine's first repeat; in the timed sweep it runs
-        // after that provider, timing pure wide-breadth search
-        "sim_ivfpq_refine_wide",
-        // quantileSelect's CONSTRUCTION runs its driver-side control
-        // jobs (bounds + histogram + sub-histogram — 3 corpus scans);
-        // not memoized (each repeat honestly rebuilds), but the
-        // warm-up sweep must not execute corpus-scale work it only
-        // means to plan, and min-over-repeats hides nothing since
-        // every repeat pays the identical build
-        "t_quantile_select")
-
-    // Memo-reusing row -> the earlier row whose timed construction its
-    // checked-in history assumes already ran (full sweeps guarantee it
-    // by alphabetical order). Used to exempt exactly these rows from
-    // the history tripwire when a name filter drops their provider —
-    // their first repeat then pays a construction the history recorded
-    // warm, an accounting artifact no probe should flag. Rows NOT here
-    // are warmth-comparable in any filter: they train into their own
-    // memo slot (the PQ legs since r16), release-and-rebuild
-    // explicitly (graph_pagerank_converged), or get their provider's
-    // work done untimed by the warm-only guard (layout_..._warm).
-    val memoProviders: Map[String, String] = Map(
-      "dedup_simhash_pairs" -> "dedup_clusters",
-      "pipeline_keep" -> "dedup_clusters",
-      "pipeline_keep_best" -> "dedup_clusters",
-      "sim_sem_dedup" -> "sim_near_dup_lsh",
-      "sim_ivfpq_refine_wide" -> "sim_ivfpq_refine")
+    val legRows = rows.filter(q => matches(q.name))
 
     // Warm-up sweep (untimed): construct every query once against the
     // bench dir — this performs the construction-time memo scans (LSH
@@ -274,13 +144,10 @@ object Bench {
         (if (tiny.isDirectory && tiny.getPath != sfDir) Seq(tiny.getPath)
          else Seq.empty) :+ sfDir
       warmDirs.foreach { d =>
-        (SparkEntry.queries ++ extraQueries).toSeq.sortBy(_._1)
-          .filter(q => matches(q._1))
-          .filter(q => d != sfDir || !heavyConstruction(q._1))
-          .foreach { case (name, entryFn) =>
-            val fn = benchForms.getOrElse(name, entryFn)
+        legRows.filter(q => d != sfDir || !q.eagerBuild)
+          .foreach { q =>
             try {
-              val df = fn(spark, d)
+              val df = q.benchForm.getOrElse(q.build)(spark, d)
               if (d != sfDir) df.count() // execute only at the tiny SF
             } catch { case _: Throwable => }
           }
@@ -291,58 +158,27 @@ object Bench {
       }
     }
 
-    // Host-calibration probe: a FIXED synthetic workload (10M-long
-    // RDD range-partition sort — shuffle write + sorted read, no
-    // parquet, no query code) timed right before the sweep. The last
-    // two rounds' driver totals moved with the box, not the code
-    // (r10 drifted ~14% and needed a hand A/B to attribute); the
-    // probe gives cross-round comparisons a same-box denominator.
-    def calibProbe(): Double = {
-      val t0 = System.nanoTime()
-      spark.sparkContext.range(0L, 10000000L, 1, numSlices = 32)
-        .map(i => (i * 2654435761L) % 999999937L)
-        .sortBy(identity)
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val calibSec = calibProbe()
+    // Host-calibration probe: HostGuard's full probe, timed right
+    // before the sweep. The last two rounds' bench totals moved with
+    // the box, not the code (r10 drifted ~14% and needed a hand A/B to
+    // attribute); the probe gives cross-round comparisons a same-box
+    // denominator, and past its limit the sweep self-reports flagged.
+    val calibSec = HostGuard.probe(spark, HostGuard.FullProbeRows)
     System.err.println(f"[bench] calibration probe: $calibSec%.3f s")
-    // Absolute degradation limit for the fixed probe: healthy runs of
-    // this box measure 3.8-5.2 s; an r14 sweep starting at 22.6 s (6x,
-    // ZERO guest-visible steal/majfault/refault — host-side memory or
-    // scheduling trouble the guest cannot meter directly) produced
-    // rows up to 30x their history. The probe is the only meter that
-    // sees that class, so past the limit the sweep self-reports
-    // flagged. Override per box via SPARK_GRAFT_CALIB_LIMIT.
-    val calibLimit = sys.env.getOrElse("SPARK_GRAFT_CALIB_LIMIT", "10.0")
-      .toDouble
+    val calibLimit = HostGuard.FullProbeLimit
 
     // Mid-leg probes: r14 proved the start/end probes leave a BLIND
     // WINDOW — a degradation that begins after the start probe and
     // ends before the end probe inflates rows 3-30× while both probes
     // read healthy (BENCH_r14: calib 5.5→2.7 s around a uniformly
-    // 1.69× sweep). Interleave a 1/5-scale probe (2M-row sort, ~0.3-1 s
-    // healthy) at every query-FAMILY boundary, untimed, after the
-    // between-query cleanup — ~15 boundaries ≈ 10 s of untimed wall
-    // per leg buys per-family localization of a mid-leg host event.
-    // Any mid probe past limit/5 folds into coload.flagged, so a
-    // contaminated sweep self-reports even when both end probes are
-    // clean.
-    def miniCalibProbe(): Double = {
-      val t0 = System.nanoTime()
-      spark.sparkContext.range(0L, 2000000L, 1, numSlices = 32)
-        .map(i => (i * 2654435761L) % 999999937L)
-        .sortBy(identity)
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val calibMidLimit =
-      sys.env.get("SPARK_GRAFT_CALIB_MID_LIMIT").map(_.toDouble)
-        .getOrElse(calibLimit / 5.0)
-    def family(n: String): String = {
-      val p = n.takeWhile(_ != '_')
-      if (p.matches("q\\d+")) "q" else if (p.matches("e\\d*")) "e" else p
-    }
+    // 1.69× sweep). Interleave the mini probe at every query-FAMILY
+    // boundary, untimed, after the between-query cleanup — ~15
+    // boundaries ≈ 10 s of untimed wall per leg buys per-family
+    // localization of a mid-leg host event. Any mid probe past its
+    // limit folds into coload.flagged, so a contaminated sweep
+    // self-reports even when both end probes are clean.
+    def miniCalibProbe(): Double = HostGuard.probe(spark, HostGuard.MiniProbeRows)
+    val calibMidLimit = HostGuard.MiniProbeLimit
     val midProbes = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     var prevFamily: String = null
 
@@ -363,32 +199,8 @@ object Bench {
       try {
         val path = sys.env.getOrElse("SPARK_GRAFT_HISTORY",
           "/root/repo/tools/bench_history.json")
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), "UTF-8")
-        // the SF key must be a KEY (next non-space char is ':'), not an
-        // SF name quoted inside a string field like "source"
-        val start = Iterator.iterate(txt.indexOf("\"" + sfName + "\""))(
-            i => txt.indexOf("\"" + sfName + "\"", i + 1))
-          .takeWhile(_ >= 0)
-          .find { i =>
-            val after = txt.drop(i + sfName.length + 2).dropWhile(_.isWhitespace)
-            after.startsWith(":")
-          }.getOrElse(-1)
-        if (start < 0) Map.empty
-        else {
-          // brace-DEPTH scan, not first-'}': a nested object inside the
-          // per-SF map would otherwise truncate the entries silently
-          val open = txt.indexOf('{', start)
-          var depth = 0
-          var close = open
-          while (close < txt.length &&
-              { val c = txt.charAt(close)
-                if (c == '{') depth += 1 else if (c == '}') depth -= 1
-                depth != 0 }) close += 1
-          "\"([a-z0-9_]+)\"\\s*:\\s*([0-9.eE+-]+)".r
-            .findAllMatchIn(txt.substring(open + 1, close))
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
+        HostGuard.parseHistory(new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(path)), "UTF-8"), sfName)
       } catch { case _: Throwable => Map.empty }
     // a guard that silently disables itself contradicts the repo's
     // self-announcing-guard rule: an empty history map means the
@@ -401,6 +213,12 @@ object Bench {
     val historyTrips =
       scala.collection.mutable.ArrayBuffer[(String, Double, Double)]()
 
+    // host-meter denominator: /proc/stat steal ticks accrue over ALL
+    // host CPUs, so the contamination fractions must divide by the
+    // box's real core count — SPARK_GRAFT_CPUS sizes only the Spark
+    // master/partitions and may legitimately differ from it
+    val hostCpus = Runtime.getRuntime.availableProcessors()
+
     // Co-load guard: the r12 official sweep was distorted 23% by a
     // concurrent JVM the single-job calibration probe cannot see (it
     // saturates the box itself, so co-load only stretches it a little).
@@ -411,63 +229,12 @@ object Bench {
     // CPU exceeds 5% of its own wall×cores self-reports flagged=true in
     // the summary line — a contaminated artifact announces itself
     // instead of needing a judge A/B rerun.
-    def loadavg1(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    // host-meter denominator: /proc/stat steal ticks accrue over ALL
-    // host CPUs, so the contamination fractions must divide by the
-    // box's real core count — SPARK_GRAFT_CPUS sizes only the Spark
-    // master/partitions and may legitimately differ from it
-    val hostCpus = Runtime.getRuntime.availableProcessors()
-    // host-level counters the per-process meter cannot see: CPU STEAL
-    // (a co-tenant VM taking the physical core — the classic invisible
-    // contention on a Firecracker guest) and IO-wait. Returns (steal,
-    // iowait) cumulative ticks from /proc/stat's aggregate cpu line.
-    def hostStealIo(): (Long, Long) =
-      try {
-        val f = scala.io.Source.fromFile("/proc/stat")
-        val cpu = try f.getLines().next() finally f.close()
-        val t = cpu.trim.split("\\s+") // cpu user nice sys idle iowait irq sirq steal
-        (t(8).toLong, t(5).toLong)
-      } catch { case _: Throwable => (-1L, -1L) }
-    def otherJvmCpuTicks(): Map[Long, Long] = {
-      val self = ProcessHandle.current().pid()
-      val procs = Option(new java.io.File("/proc").listFiles())
-        .getOrElse(Array.empty)
-      procs.iterator
-        .filter(f => f.getName.forall(_.isDigit))
-        .map(_.getName.toLong)
-        .filter(_ != self)
-        .flatMap { pid =>
-          try {
-            // classify by the EXECUTABLE (comm = argv[0] basename, 15
-            // chars), not a substring of the full cmdline — a node or
-            // python process with "java" anywhere in a path/argument
-            // (".../javascript/...") must not count as a foreign JVM
-            val comm = new String(java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(s"/proc/$pid/comm")), "UTF-8").trim
-            if (comm != "java") None
-            else {
-              val stat = new String(java.nio.file.Files.readAllBytes(
-                java.nio.file.Paths.get(s"/proc/$pid/stat")), "UTF-8")
-              // comm may contain spaces/parens — fields resume after
-              // the LAST ')': state is field 3, so utime(14) = rest(11),
-              // stime(15) = rest(12)
-              val rest = stat.substring(stat.lastIndexOf(')') + 2)
-                .split(" ")
-              Some(pid -> (rest(11).toLong + rest(12).toLong))
-            }
-          } catch { case _: Throwable => None }
-        }.toMap
-    }
-    val loadBefore = loadavg1()
-    val jvmsBefore = otherJvmCpuTicks()
-    val (stealBefore, iowaitBefore) = hostStealIo()
+    val loadBefore = HostGuard.loadavg1()
+    val jvmsBefore = HostGuard.foreignJvmCpuTicks()
+    val (stealBefore, iowaitBefore) = HostGuard.stealIoTicks()
     val sweepStartNs = System.nanoTime()
 
-    val timedNames = (SparkEntry.queries ++ extraQueries).keySet
-      .filter(matches)
+    val timedNames = legRows.map(_.name).toSet
     // A name filter that selects the _warm layout row WITHOUT its cold
     // twin would charge the one-time bucketed materialization to the
     // first (reported) "warm" repeat — construct the copies untimed
@@ -489,9 +256,8 @@ object Bench {
       }
     }
 
-    val results = (SparkEntry.queries ++ extraQueries).toSeq.sortBy(_._1)
-      .filter(q => matches(q._1))
-      .map { case (name, entryFn) =>
+    val results = legRows.map { q =>
+      val name = q.name
       val fam = family(name)
       if (prevFamily != null && fam != prevFamily) {
         val t = miniCalibProbe()
@@ -502,7 +268,7 @@ object Bench {
             "host degraded mid-sweep; this leg will self-report flagged")
       }
       prevFamily = fam
-      val fn = benchForms.getOrElse(name, entryFn)
+      val fn = q.benchForm.getOrElse(q.build)
       var sec = Double.MaxValue
       var ok = true
       var skipped = false
@@ -511,13 +277,13 @@ object Bench {
       // (min-over-repeats never applies), so further repeats could only
       // burn sweep wall time re-reading memos — skip them outright
       // (pageRankConverged alone would re-run its 47-iteration loop)
-      var planned = if (heavyConstruction(name)) 1 else repeats
+      var planned = if (q.eagerBuild) 1 else repeats
       // per-ROW steal meter: the sweep-level guard can only say "some
       // window was contaminated"; sampling /proc/stat around each row
       // localizes a mid-sweep host event to the rows it actually hit
       // (the first r13 sf10 sweep lost exactly q15–q18 to one such
       // event and needed a standalone re-measure to prove it)
-      val (rowSteal0, _) = hostStealIo()
+      val (rowSteal0, _) = HostGuard.stealIoTicks()
       val rowStartNs = System.nanoTime()
       while (rep < planned) {
         rep += 1
@@ -536,7 +302,7 @@ object Bench {
         // construction-memoized queries, which report the first (cold)
         // repeat so the memoized work can't vanish from the number
         val t = (System.nanoTime() - t0) / 1e9
-        if (heavyConstruction(name)) { if (rep == 1) sec = t }
+        if (q.eagerBuild) { if (rep == 1) sec = t }
         else sec = math.min(sec, t)
         // Fast rows are timer-noise-dominated at big SFs: one
         // descheduled task flips a sub-second query's sweep ratio
@@ -545,10 +311,10 @@ object Bench {
         // extend it to three repeats so the reported min is a stable
         // figure — cost is < 2·3 s per fast row. repeats=1 driver runs
         // are untouched (extension would change their accounting), as
-        // are heavyConstruction rows (they report the first repeat by
+        // are eagerBuild rows (they report the first repeat by
         // contract, which extension cannot stabilize).
         if (rep == planned && planned < 3 && repeats > 1 &&
-            !heavyConstruction(name) && ok && !skipped && sec < 3.0)
+            !q.eagerBuild && ok && !skipped && sec < 3.0)
           planned = 3
         if (repeats > 1) {
           System.err.println(
@@ -580,7 +346,7 @@ object Bench {
       // the self-extending fast-row policy above makes the count
       // row-dependent, and the artifact must say which policy measured
       // each row
-      val (rowSteal1, _) = hostStealIo()
+      val (rowSteal1, _) = HostGuard.stealIoTicks()
       val rowStealFrac =
         if (rowSteal0 < 0 || rowSteal1 < 0) 0.0
         else {
@@ -588,12 +354,12 @@ object Bench {
           if (wall <= 0) 0.0
           else (rowSteal1 - rowSteal0) / 100.0 / (wall * hostCpus)
         }
-      if (rowStealFrac > 0.05)
+      if (rowStealFrac > HostGuard.ContentionLimit)
         System.err.println(f"[bench] WARNING: $name ran under " +
           f"${rowStealFrac * 100}%.1f%% hypervisor steal — treat its " +
           "time as contaminated")
       val histPrev = historyTimes.getOrElse(name, 0.0)
-      val tripRatio = Bench.tripRatioFor(histPrev)
+      val tripRatio = HostGuard.tripRatioFor(histPrev)
       // Memo-REUSING rows' first-repeat accounting assumes their
       // PROVIDER row ran earlier in the sweep (full sweeps — the runs
       // history is refreshed from — guarantee it by alphabetical
@@ -601,11 +367,11 @@ object Bench {
       // reuser pay a construction its history recorded warm, so its
       // tripwire would fire on an accounting artifact, not the host or
       // the code. Exempt exactly those rows — every self-contained
-      // heavyConstruction row (its own memo slot, or an explicit
+      // eagerBuild row (its own memo slot, or an explicit
       // release-and-rebuild like graph_pagerank_converged) keeps its
       // tripwire on filtered runs too.
       val warmthComparable =
-        !(filtered && memoProviders.get(name).exists(p => !matches(p)))
+        !(filtered && q.memoFrom.exists(p => !matches(p)))
       if (ok && !skipped && warmthComparable &&
           histPrev >= 0.3 && sec > tripRatio * histPrev) {
         val ratio = sec / histPrev
@@ -627,9 +393,9 @@ object Bench {
         rowStealFrac)
     }
     val sweepWallSec = (System.nanoTime() - sweepStartNs) / 1e9
-    val loadAfter = loadavg1()
-    val jvmsAfter = otherJvmCpuTicks()
-    val (stealAfter, iowaitAfter) = hostStealIo()
+    val loadAfter = HostGuard.loadavg1()
+    val jvmsAfter = HostGuard.foreignJvmCpuTicks()
+    val (stealAfter, iowaitAfter) = HostGuard.stealIoTicks()
     val stealSec =
       if (stealBefore < 0 || stealAfter < 0) -1.0
       else (stealAfter - stealBefore) / 100.0
@@ -651,7 +417,7 @@ object Bench {
     // end-of-sweep probe: catches degradation that began MID-sweep
     // (the start probe alone passed a sweep whose later rows ran on a
     // 6x-degraded host)
-    val calibEndSec = calibProbe()
+    val calibEndSec = HostGuard.probe(spark, HostGuard.FullProbeRows)
     System.err.println(f"[bench] calibration probe (end): $calibEndSec%.3f s")
     val calibMidMax = if (midProbes.isEmpty) 0.0 else midProbes.map(_._2).max
     val calibFlag = calibSec > calibLimit || calibEndSec > calibLimit ||
@@ -661,7 +427,8 @@ object Bench {
       // a clean probe stays in history_trips as a regression pointer
       // without flagging the leg
       historyTrips.exists(_._3 > calibMidLimit)
-    val coloadFlag = coloadFrac > 0.05 || stealFrac > 0.05 || calibFlag
+    val coloadFlag = coloadFrac > HostGuard.ContentionLimit ||
+      stealFrac > HostGuard.ContentionLimit || calibFlag
     if (coloadFlag)
       System.err.println(f"[bench] WARNING: co-load guard tripped — " +
         f"foreign JVMs $otherJvmCpuSec%.1f CPU-s, hypervisor steal " +
@@ -677,8 +444,7 @@ object Bench {
     // the neighbors. SPARK_GRAFT_RECALL=off skips (e.g. huge SFs).
     val recall: Seq[(String, Double)] =
       if (sys.env.getOrElse("SPARK_GRAFT_RECALL", "on") == "off") Seq.empty
-      else try graft.operators.AnnRecall.recallAtK(spark, sfDir,
-        (SparkEntry.queries ++ extraQueries).keySet.filter(matches))
+      else try graft.operators.AnnRecall.recallAtK(spark, sfDir, timedNames)
       catch { case e: Throwable =>
         System.err.println(s"[bench] recall computation failed: $e")
         Seq.empty
@@ -758,7 +524,7 @@ object Bench {
       .mkString("{", ",", "}")
     // per-row steal (full record only): which rows a mid-sweep host
     // event actually touched
-    val stealRows = results.filter(_._4 > 0.05)
+    val stealRows = results.filter(_._4 > HostGuard.ContentionLimit)
     val rowStealJson = stealRows
       .map { case (k, _, _, f) => q(k) + ":" + num(f) }
       .mkString("{", ",", "}")
@@ -863,9 +629,9 @@ object Bench {
         (if (withRecall) s""""recall":$recallJson,""" else "") +
         s"""$comparableJson,""" +
         s""""full":${q(fullPath)},"sf":${q(sfDir)}}"""
-    val summary = Seq(summaryLine(true, true), summaryLine(false, true),
-      summaryLine(false, false)).find(_.length <= 1900)
-      .getOrElse(summaryLine(false, false))
+    val variants = Seq(summaryLine(true, true), summaryLine(false, true),
+      summaryLine(false, false))
+    val summary = variants.find(_.length <= 1900).getOrElse(variants.last)
     if (summary.length > 1900)
       System.err.println(s"[bench] WARNING: summary line is " +
         s"${summary.length} chars even after dropping optional fields " +

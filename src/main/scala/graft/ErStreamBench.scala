@@ -59,7 +59,7 @@ object ErStreamBench {
       }
       .toDF("src_id", "dname")
 
-    val (r, g) = StreamGuard.guarded(spark, "er_stream") {
+    val (r, g) = HostGuard.guarded(spark, "er_stream") {
       StreamBench.measure(spark, rate, seconds) {
         EntityResolution.bestMatchStream(stream, spark, dir)
           .writeStream.format("noop").outputMode("append").start()

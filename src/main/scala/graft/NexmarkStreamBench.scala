@@ -139,7 +139,7 @@ object NexmarkStreamBench {
       ("q11_sessions", q11 _, "append"))
 
     val results = queries.map { case (name, build, mode) =>
-      val (r, g) = StreamGuard.guarded(spark, s"nexmark_$name") {
+      val (r, g) = HostGuard.guarded(spark, s"nexmark_$name") {
         StreamBench.measure(spark, amplitude, seconds) {
           build(sineBids(spark, base = 0, amplitude, cycleSec))
             .writeStream.format("noop").outputMode(mode).start()
@@ -151,7 +151,7 @@ object NexmarkStreamBench {
       // Q3 runs the reference's own two-stream rates (Query3.java:
       // 60-62), constant not sine: 20k auctions/s + 10k persons/s
       val (aRate, pRate) = (20000, 10000)
-      val (r, g) = StreamGuard.guarded(spark, "nexmark_q3_join") {
+      val (r, g) = HostGuard.guarded(spark, "nexmark_q3_join") {
         StreamBench.measure(spark, aRate + pRate, seconds) {
           q3(spark, aRate, pRate)
             .writeStream.format("noop").outputMode("append").start()

@@ -51,7 +51,7 @@ object OrderStreamBench {
     // runId filter, the died-mid-run check, and the percentile summary
     // — an earlier inline copy here had none of them
     val mode = if (tws) "tws" else "fmgws"
-    val (r, g) = StreamGuard.guarded(spark, s"order_$mode") {
+    val (r, g) = HostGuard.guarded(spark, s"order_$mode") {
       StreamBench.measure(spark, rate, seconds) {
         trades.writeStream.format("noop").outputMode("append").start()
       }
@@ -89,7 +89,7 @@ object OrderStreamBench {
     val trades = TransformWithStateOps.orderBookWarm(orders, snapshot)
     // the guard brackets only the LIVE stream window — the snapshot
     // build is the offline job, reported beside it, never inside it
-    val (r, g) = StreamGuard.guarded(spark, "order_tws_warm") {
+    val (r, g) = HostGuard.guarded(spark, "order_tws_warm") {
       StreamBench.measure(spark, rate, seconds) {
         trades.writeStream.format("noop").outputMode("append").start()
       }

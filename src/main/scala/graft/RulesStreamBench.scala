@@ -79,7 +79,7 @@ object RulesStreamBench {
     val (pk, pv) = TransformWithStateOps.RocksDbProvider
     spark.conf.set(pk, pv)
     val ckpt = Files.createTempDirectory("rules-bench-ckpt").toString
-    val (tws, twsG) = StreamGuard.guarded(spark, "rules_tws") {
+    val (tws, twsG) = HostGuard.guarded(spark, "rules_tws") {
       StreamBench.measure(spark, rate, seconds) {
         RulesTws.alerts(events(spark, rate, nKeys), () => rules)
           .writeStream
@@ -96,7 +96,7 @@ object RulesStreamBench {
     System.err.println(s"[rules-bench] tws: ${tws.json} alerts=$twsAlerts")
 
     // --- foreachBatch accumulator twin ---
-    val (fb, fbG) = StreamGuard.guarded(spark, "rules_foreach_batch") {
+    val (fb, fbG) = HostGuard.guarded(spark, "rules_foreach_batch") {
       StreamBench.measure(spark, rate, seconds) {
         graft.operators.DynamicRules.streaming(
           events(spark, rate, nKeys), () => rules,

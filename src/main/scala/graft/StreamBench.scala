@@ -116,13 +116,9 @@ object StreamBench {
       .format("rate")
       .option("rowsPerSecond", rate)
       .load()
-    // latency observation costs one max() aggregation per batch; A/B'd
-    // as negligible, but the toggle keeps the pure-throughput form
-    // measurable (SPARK_GRAFT_NO_LATENCY=1)
-    val observed =
-      if (sys.env.contains("SPARK_GRAFT_NO_LATENCY")) raw
-      else Metrics.observeSourceTs(raw, "timestamp")
-    val tuples = observed
+    // latency observation costs one max() aggregation per batch (A/B'd
+    // as negligible)
+    val tuples = Metrics.observeSourceTs(raw, "timestamp")
       .select(col("value"))
       .as[Long]
       .map(v => KeyedTuple(s"A${v % nKeys}", 1L))
@@ -155,7 +151,7 @@ object StreamBench {
         // guard name keys the per-leg history tripwire
         // (tools/stream_history.json): micro_1k / micro_10k / micro_100k
         val legName = s"micro_${perKeyBytes / 1024}k"
-        val (r, g) = StreamGuard.guarded(spark, legName) {
+        val (r, g) = HostGuard.guarded(spark, legName) {
           runOnce(spark, rate, nKeys, perKeyBytes, seconds)
         }(_.meanRps)
         f"""{"metric":"stream_rows_per_sec","value":${r.meanRps}%.0f,"unit":"rows/sec","batches":${r.batches},"total_rows":${r.totalRows},"busy_fraction":${r.busyFraction}%.2f,"duration_ms":{"p50":${r.durP50},"p95":${r.durP95},"p99":${r.durP99}},"latency_ms":{"p50":${r.latP50},"p95":${r.latP95},"p99":${r.latP99}},"config":{"rate":$rate,"keys":$nKeys,"state_bytes":$perKeyBytes},"guard":${g.json}}"""
@@ -189,7 +185,7 @@ object StreamBench {
   * JVMs, each re-paying a 16 GiB pre-touch on a host whose first-touch
   * fault path intermittently degrades ~100×, and the suite had no way
   * to say which legs a host event hit. One JVM touches the heap once;
-  * every leg then runs under [[StreamGuard]]'s probe/steal/history
+  * every leg then runs under [[HostGuard]]'s probe/steal/history
   * brackets (each main attaches its own), so a contaminated leg
   * self-reports `flagged` in its artifact. Each main stops its
   * SparkSession; the next `getOrCreate` rebuilds a local context in

@@ -61,7 +61,9 @@ object Tables {
 
   /** Scratch-parquet directory for a construction-memoized
     * materialization: distinct per (session, FULL sanitized dir, source
-    * table mtime, tag). The mtime stamp matches the memo key above, so
+    * table, its mtime, tag). The table name keeps two tables of one
+    * materialization apart even when their mtimes are equal, as in a
+    * fresh checkout or copy. The mtime stamp matches the memo key above, so
     * a table regenerated in place mid-session gets a FRESH directory —
     * plans built from the old memo entry keep reading their old files
     * instead of racing a same-path overwrite — and two corpora can
@@ -75,7 +77,7 @@ object Tables {
     // never share one materialization (a later overwrite would delete
     // files the earlier corpus's constructed plans still read)
     val sane = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft-$tag-" +
+    s"${System.getProperty("java.io.tmpdir")}/graft-$tag-$table-" +
       s"${System.identityHashCode(s)}-$sane-${dirDigest(dir)}-$stamp"
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.GraftFunctions.{dotProduct, md5CoinLong}
 
 /** IVF (inverted-file) approximate nearest-neighbor search — the
@@ -197,9 +197,8 @@ object AnnIvf {
       |  FROM scored)
       |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_ann_ivf" -> (annIvfQuery _))
-
-  val oracles: Map[String, String] = Map(
-    "sim_ann_ivf" -> annIvfSql)
+  val specs: Seq[QuerySpec] = Seq(
+    // the quantizer (count + sample + k-means + centroid broadcast) is
+    // construction-memoized per table version
+    QuerySpec("sim_ann_ivf", annIvfQuery, Some(annIvfSql), eagerBuild = true))
 }

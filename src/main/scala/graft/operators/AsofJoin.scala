@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** As-of (temporal) join: for each left row, the right row with the
   * greatest right-time ≤ left-time on the same key — the standard
@@ -56,9 +56,6 @@ object AsofJoin {
       |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
       |ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "asof_latest_order" -> (asofLatestOrder _))
-
-  val oracles: Map[String, String] = Map(
-    "asof_latest_order" -> asofLatestOrderSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("asof_latest_order", asofLatestOrder, Some(asofLatestOrderSql)))
 }

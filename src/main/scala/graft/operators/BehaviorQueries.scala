@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** User-behavior analytics over the event stream: ordered funnel
   * conversion and cohort retention — the two canonical shapes a
@@ -149,13 +149,8 @@ object BehaviorQueries {
       |WHERE value > mean + 3 * std
       |ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e_funnel" -> (funnel _),
-    "e_cohort_retention" -> (cohortRetention _),
-    "e_anomaly" -> (anomalies _))
-
-  val oracles: Map[String, String] = Map(
-    "e_funnel" -> funnelSql,
-    "e_cohort_retention" -> cohortRetentionSql,
-    "e_anomaly" -> anomaliesSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("e_funnel", funnel, Some(funnelSql)),
+    QuerySpec("e_cohort_retention", cohortRetention, Some(cohortRetentionSql)),
+    QuerySpec("e_anomaly", anomalies, Some(anomaliesSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.GraftFunctions.tokens
 
 /** Iterative BPE tokenizer training over the corpus — the loop whose
@@ -187,13 +187,9 @@ object BpeTrainer {
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t_bpe_merges" -> (bpeMerges _),
-    "t_bpe_encode" -> (bpeEncode _))
-
-  val oracles: Map[String, String] = Map(
-    "t_bpe_merges" -> bpeMergesSql,
-    "t_bpe_encode" -> bpeEncodeSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("t_bpe_merges", bpeMerges, Some(bpeMergesSql)),
+    QuerySpec("t_bpe_encode", bpeEncode, Some(bpeEncodeSql)))
 
   /** Run `nMerges` BPE merge rounds; returns the learned merge list
     * in order plus the final vocab frame. Stops only when NO pair

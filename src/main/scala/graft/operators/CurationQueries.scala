@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.GraftFunctions.{hexSliceLong, md5CoinLong, shinglesOfTokens, tokens}
 import graft.functions.HashExpressions.shingleHashes
 
@@ -899,37 +899,20 @@ object CurationQueries {
       |  (idx <= m) AS supply_capped
       |FROM bounded ORDER BY source""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t_unimax_sampling" -> (unimaxSampling _),
-    "t_dsir_weights" -> (dsirWeights _),
-    "t_quality_buckets" -> (qualityBuckets _),
-    "t_novelty" -> (novelty _),
-    "t_decontaminate" -> (decontaminate _),
-    "s_sample_hash" -> (sampleHash _),
-    "s_sample_stratified" -> (sampleStratified _),
-    "t_repetition" -> (repetition _),
-    "t_length_percentiles" -> (lengthPercentiles _),
-    "t_pack_sequences" -> (packSequences _),
-    "t_mixture_rebalance" -> (mixtureRebalance _),
-    "t_source_overlap" -> (sourceOverlap _),
-    "t_dup_spans" -> (dupSpans _),
-    "t_chunk_windows" -> (chunkWindows _),
-    "t_shard_assign" -> (shardAssign _))
-
-  val oracles: Map[String, String] = Map(
-    "t_unimax_sampling" -> unimaxSamplingSql,
-    "t_dsir_weights" -> dsirWeightsSql,
-    "t_quality_buckets" -> qualityBucketsSql,
-    "t_novelty" -> noveltySql,
-    "t_decontaminate" -> decontaminateSql,
-    "s_sample_hash" -> sampleHashSql,
-    "s_sample_stratified" -> sampleStratifiedSql,
-    "t_repetition" -> repetitionSql,
-    "t_length_percentiles" -> lengthPercentilesSql,
-    "t_pack_sequences" -> packSequencesSql,
-    "t_mixture_rebalance" -> mixtureRebalanceSql,
-    "t_source_overlap" -> sourceOverlapSql,
-    "t_dup_spans" -> dupSpansSql,
-    "t_chunk_windows" -> chunkWindowsSql,
-    "t_shard_assign" -> shardAssignSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("t_unimax_sampling", unimaxSampling, Some(unimaxSamplingSql)),
+    QuerySpec("t_dsir_weights", dsirWeights, Some(dsirWeightsSql)),
+    QuerySpec("t_quality_buckets", qualityBuckets, Some(qualityBucketsSql)),
+    QuerySpec("t_novelty", novelty, Some(noveltySql)),
+    QuerySpec("t_decontaminate", decontaminate, Some(decontaminateSql)),
+    QuerySpec("s_sample_hash", sampleHash, Some(sampleHashSql)),
+    QuerySpec("s_sample_stratified", sampleStratified, Some(sampleStratifiedSql)),
+    QuerySpec("t_repetition", repetition, Some(repetitionSql)),
+    QuerySpec("t_length_percentiles", lengthPercentiles, Some(lengthPercentilesSql)),
+    QuerySpec("t_pack_sequences", packSequences, Some(packSequencesSql)),
+    QuerySpec("t_mixture_rebalance", mixtureRebalance, Some(mixtureRebalanceSql)),
+    QuerySpec("t_source_overlap", sourceOverlap, Some(sourceOverlapSql)),
+    QuerySpec("t_dup_spans", dupSpans, Some(dupSpansSql)),
+    QuerySpec("t_chunk_windows", chunkWindows, Some(chunkWindowsSql)),
+    QuerySpec("t_shard_assign", shardAssign, Some(shardAssignSql)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.GraftFunctions.tokens
 
 /** Dataloader-preparation operators: the batch-shaping math a training
@@ -95,11 +95,7 @@ object DataloaderQueries {
        |       COUNT(*) * MAX(n_tokens) - CAST(SUM(n_tokens) AS BIGINT) AS pad_tokens
        |FROM r GROUP BY source, batch_id ORDER BY source, batch_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t_length_buckets" -> (lengthBuckets _),
-    "t_dataloader_batches" -> (dataloaderBatches _))
-
-  val oracles: Map[String, String] = Map(
-    "t_length_buckets" -> lengthBucketsSql,
-    "t_dataloader_batches" -> dataloaderBatchesSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("t_length_buckets", lengthBuckets, Some(lengthBucketsSql)),
+    QuerySpec("t_dataloader_batches", dataloaderBatches, Some(dataloaderBatchesSql)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** The remaining decision-support query shapes of the TPC-H family
   * (Q8, Q9, Q11, Q12, Q16, Q17, Q19, Q20, Q21), adapted to the
@@ -427,25 +427,15 @@ object DecisionSupportQueries {
       |WHERE n_name = 'NATION_9'
       |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q8_market_share" -> (q8MarketShare _),
-    "q9_product_profit" -> (q9ProductProfit _),
-    "q11_important_stock" -> (q11ImportantStock _),
-    "q12_late_priority" -> (q12LatePriority _),
-    "q16_supplier_cnt" -> (q16SupplierCnt _),
-    "q17_small_qty_revenue" -> (q17SmallQtyRevenue _),
-    "q19_disjunctive_revenue" -> (q19DisjunctiveRevenue _),
-    "q20_promo_suppliers" -> (q20PromoSuppliers _),
-    "q21_waiting_suppliers" -> (q21WaitingSuppliers _))
-
-  val oracles: Map[String, String] = Map(
-    "q8_market_share" -> q8MarketShareSql,
-    "q9_product_profit" -> q9ProductProfitSql,
-    "q11_important_stock" -> q11ImportantStockSql,
-    "q12_late_priority" -> q12LatePrioritySql,
-    "q16_supplier_cnt" -> q16SupplierCntSql,
-    "q17_small_qty_revenue" -> q17SmallQtyRevenueSql,
-    "q19_disjunctive_revenue" -> q19DisjunctiveRevenueSql,
-    "q20_promo_suppliers" -> q20PromoSuppliersSql,
-    "q21_waiting_suppliers" -> q21WaitingSuppliersSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q8_market_share", q8MarketShare, Some(q8MarketShareSql)),
+    QuerySpec("q9_product_profit", q9ProductProfit, Some(q9ProductProfitSql)),
+    QuerySpec("q11_important_stock", q11ImportantStock, Some(q11ImportantStockSql)),
+    QuerySpec("q12_late_priority", q12LatePriority, Some(q12LatePrioritySql)),
+    QuerySpec("q16_supplier_cnt", q16SupplierCnt, Some(q16SupplierCntSql)),
+    QuerySpec("q17_small_qty_revenue", q17SmallQtyRevenue, Some(q17SmallQtyRevenueSql)),
+    QuerySpec("q19_disjunctive_revenue", q19DisjunctiveRevenue,
+      Some(q19DisjunctiveRevenueSql)),
+    QuerySpec("q20_promo_suppliers", q20PromoSuppliers, Some(q20PromoSuppliersSql)),
+    QuerySpec("q21_waiting_suppliers", q21WaitingSuppliers, Some(q21WaitingSuppliersSql)))
 }

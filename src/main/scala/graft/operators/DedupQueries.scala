@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.GraftFunctions.tokens
 import graft.functions.HashExpressions.{minhashSig, shingleHashes, simhash64}
 
@@ -109,8 +109,9 @@ object DedupQueries {
     verifyJaccard(ngramCandidates(s, dir), docShingleArrays(s, dir), 0.7)
       .orderBy(col("id1"), col("id2"))
 
-  /** Candidate (id1, id2) pairs of [[ngramJaccard]] — exposed for
-    * stage profiling ([[graft.tools.ProfileNgram]]). Exactness: every
+  /** Candidate (id1, id2) pairs of [[ngramJaccard]] (stage profile:
+    * commit 200771a; plan audit
+    * plans/r18/dedup_ngram_jaccard_sf10_audit.txt). Exactness: every
     * pruning rule below only DISCARDS pairs the exact verification
     * would discard anyway; every true J ≥ 0.7 pair survives. */
   private[graft] def ngramCandidates(s: SparkSession, dir: String)
@@ -208,9 +209,9 @@ object DedupQueries {
     * Each signature slot is an `array_min` over the doc's hash array —
     * computed NARROWLY per document row, no (doc, shingle) explosion
     * and no aggregation shuffle at all. */
-  /** (doc_id, band, bucket) LSH band-bucket rows of [[minhashLsh]] —
-    * extracted so [[graft.tools.ProfileDedupSkew]] can measure bucket
-    * population skew on exactly the production construction. */
+  /** (doc_id, band, bucket) LSH band-bucket rows of [[minhashLsh]],
+    * the construction whose bucket population skew
+    * plans/r18/dedup_skew_counts.txt measured (commit 86e32e9). */
   private[graft] def minhashBuckets(docs: DataFrame): DataFrame = {
     val numHashes = 16
     val rowsPerBand = 4
@@ -363,15 +364,6 @@ object DedupQueries {
       case other => throw new IllegalArgumentException(s"unknown cc path $other")
     }
   }
-
-  /** Dev hook for tools.ProfileClusters — the raw pair set. */
-  private[graft] def simhashPairsForProfile(s: SparkSession,
-      dir: String): DataFrame =
-    hammingPairs(s, dir).select(col("id1"), col("id2"))
-
-  /** Dev hook for tools.ProfileClusters — the signature stage alone. */
-  private[graft] def sigForProfile(s: SparkSession, dir: String): DataFrame =
-    sig64(s, dir)
 
   /** Materialized hamming≤3 pair set, shared by dedup_simhash_pairs
     * and the CC family (dedup_clusters / pipeline_keep /
@@ -1127,25 +1119,22 @@ object DedupQueries {
       |SELECT doc_id, rep AS cluster_rep, n_kept_members, ttr
       |FROM kept WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_keep_best" -> (pipelineKeepBest _),
-    "dedup_simhash_pairs" -> (simhashPairs _),
-    "dedup_exact" -> (exactDedup _),
-    "dedup_ngram_jaccard" -> (ngramJaccard _),
-    "dedup_minhash_lsh" -> (minhashLsh _),
-    "dedup_simhash" -> (simhash _),
-    "dedup_clusters" -> (simhashClusters _),
-    "pipeline_keep" -> (pipelineKeep _))
-
-  val oracles: Map[String, String] = Map(
-    "pipeline_keep_best" -> pipelineKeepBestSql,
-    "dedup_simhash_pairs" -> simhashPairsSql,
-    "dedup_exact" -> exactDedupSql,
-    "dedup_ngram_jaccard" -> ngramJaccardSql,
-    "dedup_minhash_lsh" -> minhashLshSql,
-    "dedup_clusters" -> simhashClustersSql,
-    "pipeline_keep" -> pipelineKeepSql,
-    "dedup_simhash" -> simhashSql)
+  val specs: Seq[QuerySpec] = Seq(
+    // the CC family materializes the shared cluster-label table
+    // (simhashClusters memo): charged to dedup_clusters, the first of
+    // them in the sweep, and reused by the other three
+    QuerySpec("pipeline_keep_best", pipelineKeepBest, Some(pipelineKeepBestSql),
+      eagerBuild = true, memoFrom = Some("dedup_clusters")),
+    QuerySpec("dedup_simhash_pairs", simhashPairs, Some(simhashPairsSql),
+      eagerBuild = true, memoFrom = Some("dedup_clusters")),
+    QuerySpec("dedup_exact", exactDedup, Some(exactDedupSql)),
+    QuerySpec("dedup_ngram_jaccard", ngramJaccard, Some(ngramJaccardSql)),
+    QuerySpec("dedup_minhash_lsh", minhashLsh, Some(minhashLshSql)),
+    QuerySpec("dedup_simhash", simhash, Some(simhashSql)),
+    QuerySpec("dedup_clusters", simhashClusters, Some(simhashClustersSql),
+      eagerBuild = true),
+    QuerySpec("pipeline_keep", pipelineKeep, Some(pipelineKeepSql),
+      eagerBuild = true, memoFrom = Some("dedup_clusters")))
 }
 
 /** Allocation-free union-find primitives shared by the driver-side CC

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType,
   StringType, StructField, StructType}
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.model.Rule
 
 /** Rule-driven dynamic aggregation — the reference's megaphone fraud
@@ -388,9 +388,6 @@ object DynamicRules {
       |  HAVING CAST(MAX(CAST(value AS DECIMAL(18,2))) AS DOUBLE) >= 190)
       |ORDER BY rule_id, win_start, key""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rules_alerts" -> (rulesAlerts _))
-
-  val oracles: Map[String, String] = Map(
-    "rules_alerts" -> rulesAlertsSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("rules_alerts", rulesAlerts, Some(rulesAlertsSql)))
 }

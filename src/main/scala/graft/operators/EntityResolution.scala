@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Entity-resolution fuzzy join: match a "dirty" name registry against
   * the clean one within Levenshtein distance 1, WITHOUT a cross join.
@@ -98,8 +98,9 @@ object EntityResolution {
          |                substring($c, i + 1)))))""".stripMargin)
   }
 
-  /** Probe hooks (graft.tools.ProfileEr) — internals exposed read-only
-    * so the volume profiler instruments the exact production stages. */
+  /** Probe hooks — internals exposed read-only so the ER stream bench
+    * and GraphErSpec instrument the exact production stages (volume
+    * study: commit d9fc6e3; plan audit plans/r17/er_best_match_audit.txt). */
   private[graft] def dirtyNameSqlForProbe: String = dirtyNameSql
   private[graft] def taggedSigsForProbe(c: String, dirtySide: Boolean): Column =
     taggedSigs(c, dirtySide)
@@ -331,11 +332,7 @@ object EntityResolution {
        |  src_id = k % ${PackBase} AS same_entity
        |FROM best ORDER BY src_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "er_fuzzy_match" -> (fuzzyMatch _),
-    "er_best_match" -> (bestMatch _))
-
-  val oracles: Map[String, String] = Map(
-    "er_fuzzy_match" -> fuzzyMatchSql,
-    "er_best_match" -> bestMatchSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("er_fuzzy_match", fuzzyMatch, Some(fuzzyMatchSql)),
+    QuerySpec("er_best_match", bestMatch, Some(bestMatchSql)))
 }

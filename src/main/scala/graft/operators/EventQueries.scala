@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Batch twins of the reference's streaming query surface (Nexmark
   * Q1/Q2/Q3/Q5/Q8/Q11 analogs), expressed over the driver's `events`
@@ -260,33 +260,18 @@ object EventQueries {
       |  SELECT user_id FROM c EXCEPT SELECT user_id FROM p)
       |ORDER BY segment, user_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e_interval_join" -> (eIntervalJoin _),
-    "e_pivot_daily" -> (ePivotDaily _),
-    "e_set_segments" -> (eSetSegments _),
-    "e1_map_currency" -> (e1MapCurrency _),
-    "e2_filter" -> (e2Filter _),
-    "e3_join_dim" -> (e3JoinDim _),
-    "e5_tumbling_hourly" -> (e5TumblingHourly _),
-    "e5_sliding_hot" -> (e5SlidingHot _),
-    "e8_window_join" -> (e8WindowJoin _),
-    "e11_sessions" -> (e11Sessions _),
-    "e_word_count" -> (eWordCount _),
-    "e_keygroups" -> (eKeygroups _),
-    "e_json_props" -> (eJsonProps _))
-
-  val oracles: Map[String, String] = Map(
-    "e_interval_join" -> eIntervalJoinSql,
-    "e_pivot_daily" -> ePivotDailySql,
-    "e_set_segments" -> eSetSegmentsSql,
-    "e1_map_currency" -> e1MapCurrencySql,
-    "e2_filter" -> e2FilterSql,
-    "e3_join_dim" -> e3JoinDimSql,
-    "e5_tumbling_hourly" -> e5TumblingHourlySql,
-    "e5_sliding_hot" -> e5SlidingHotSql,
-    "e8_window_join" -> e8WindowJoinSql,
-    "e11_sessions" -> e11SessionsSql,
-    "e_word_count" -> eWordCountSql,
-    "e_keygroups" -> eKeygroupsSql,
-    "e_json_props" -> eJsonPropsSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("e_interval_join", eIntervalJoin, Some(eIntervalJoinSql)),
+    QuerySpec("e_pivot_daily", ePivotDaily, Some(ePivotDailySql)),
+    QuerySpec("e_set_segments", eSetSegments, Some(eSetSegmentsSql)),
+    QuerySpec("e1_map_currency", e1MapCurrency, Some(e1MapCurrencySql)),
+    QuerySpec("e2_filter", e2Filter, Some(e2FilterSql)),
+    QuerySpec("e3_join_dim", e3JoinDim, Some(e3JoinDimSql)),
+    QuerySpec("e5_tumbling_hourly", e5TumblingHourly, Some(e5TumblingHourlySql)),
+    QuerySpec("e5_sliding_hot", e5SlidingHot, Some(e5SlidingHotSql)),
+    QuerySpec("e8_window_join", e8WindowJoin, Some(e8WindowJoinSql)),
+    QuerySpec("e11_sessions", e11Sessions, Some(e11SessionsSql)),
+    QuerySpec("e_word_count", eWordCount, Some(eWordCountSql)),
+    QuerySpec("e_keygroups", eKeygroups, Some(eKeygroupsSql)),
+    QuerySpec("e_json_props", eJsonProps, Some(eJsonPropsSql)))
 }

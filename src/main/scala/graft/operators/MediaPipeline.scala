@@ -5,7 +5,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Multimodal-column pipeline: image/audio/video payloads travel as
   * opaque BINARY columns with typed metadata; decode / feature-extract
@@ -471,11 +471,7 @@ object MediaPipeline {
       |  FROM documents)
       |ORDER BY media_id, frame_idx""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "media_features" -> (mediaFeatures _),
-    "media_frames" -> (mediaFrames _))
-
-  val oracles: Map[String, String] = Map(
-    "media_features" -> mediaFeaturesSql,
-    "media_frames" -> mediaFramesSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("media_features", mediaFeatures, Some(mediaFeaturesSql)),
+    QuerySpec("media_frames", mediaFrames, Some(mediaFramesSql)))
 }

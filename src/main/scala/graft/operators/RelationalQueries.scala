@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Batch relational query surface over the driver test tables.
   *
@@ -514,47 +514,25 @@ object RelationalQueries {
       |FROM orders
       |ORDER BY o_custkey, o_orderkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cube_returns" -> (cubeReturns _),
-    "window_range_7d" -> (windowRange7d _),
-    "q4_order_priority" -> (q4OrderPriority _),
-    "q7_nation_pairs" -> (q7NationPairs _),
-    "q10_returned_items" -> (q10ReturnedItems _),
-    "q14_promo_share" -> (q14PromoShare _),
-    "q1_pricing_summary" -> (q1PricingSummary _),
-    "q3_top_revenue" -> (q3TopRevenue _),
-    "q5_nation_revenue" -> (q5NationRevenue _),
-    "q6_forecast" -> (q6Forecast _),
-    "join_semi" -> (joinSemi _),
-    "join_anti" -> (joinAnti _),
-    "join_outer_audit" -> (joinOuterAudit _),
-    "window_top_orders" -> (windowTopOrders _),
-    "window_running_sum" -> (windowRunningSum _),
-    "rollup_returns" -> (rollupReturns _),
-    "grouping_sets_revenue" -> (groupingSets _),
-    "window_dod_delta" -> (windowDodDelta _),
-    "distinct_counts" -> (distinctCounts _),
-    "decimal_accumulators" -> (decimalAccumulators _))
-
-  val oracles: Map[String, String] = Map(
-    "cube_returns" -> cubeReturnsSql,
-    "window_range_7d" -> windowRange7dSql,
-    "q4_order_priority" -> q4OrderPrioritySql,
-    "q7_nation_pairs" -> q7NationPairsSql,
-    "q10_returned_items" -> q10ReturnedItemsSql,
-    "q14_promo_share" -> q14PromoShareSql,
-    "q1_pricing_summary" -> q1PricingSummarySql,
-    "q3_top_revenue" -> q3TopRevenueSql,
-    "q5_nation_revenue" -> q5NationRevenueSql,
-    "q6_forecast" -> q6ForecastSql,
-    "join_semi" -> joinSemiSql,
-    "join_anti" -> joinAntiSql,
-    "join_outer_audit" -> joinOuterAuditSql,
-    "window_top_orders" -> windowTopOrdersSql,
-    "window_running_sum" -> windowRunningSumSql,
-    "rollup_returns" -> rollupReturnsSql,
-    "grouping_sets_revenue" -> groupingSetsSql,
-    "window_dod_delta" -> windowDodDeltaSql,
-    "distinct_counts" -> distinctCountsSql,
-    "decimal_accumulators" -> decimalAccumulatorsSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("cube_returns", cubeReturns, Some(cubeReturnsSql)),
+    QuerySpec("window_range_7d", windowRange7d, Some(windowRange7dSql)),
+    QuerySpec("q4_order_priority", q4OrderPriority, Some(q4OrderPrioritySql)),
+    QuerySpec("q7_nation_pairs", q7NationPairs, Some(q7NationPairsSql)),
+    QuerySpec("q10_returned_items", q10ReturnedItems, Some(q10ReturnedItemsSql)),
+    QuerySpec("q14_promo_share", q14PromoShare, Some(q14PromoShareSql)),
+    QuerySpec("q1_pricing_summary", q1PricingSummary, Some(q1PricingSummarySql)),
+    QuerySpec("q3_top_revenue", q3TopRevenue, Some(q3TopRevenueSql)),
+    QuerySpec("q5_nation_revenue", q5NationRevenue, Some(q5NationRevenueSql)),
+    QuerySpec("q6_forecast", q6Forecast, Some(q6ForecastSql)),
+    QuerySpec("join_semi", joinSemi, Some(joinSemiSql)),
+    QuerySpec("join_anti", joinAnti, Some(joinAntiSql)),
+    QuerySpec("join_outer_audit", joinOuterAudit, Some(joinOuterAuditSql)),
+    QuerySpec("window_top_orders", windowTopOrders, Some(windowTopOrdersSql)),
+    QuerySpec("window_running_sum", windowRunningSum, Some(windowRunningSumSql)),
+    QuerySpec("rollup_returns", rollupReturns, Some(rollupReturnsSql)),
+    QuerySpec("grouping_sets_revenue", groupingSets, Some(groupingSetsSql)),
+    QuerySpec("window_dod_delta", windowDodDelta, Some(windowDodDeltaSql)),
+    QuerySpec("distinct_counts", distinctCounts, Some(distinctCountsSql)),
+    QuerySpec("decimal_accumulators", decimalAccumulators, Some(decimalAccumulatorsSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Semantic deduplication (SemDeDup, Abbas et al. 2023, arXiv
   * 2303.09540): cluster documents whose EMBEDDINGS are near-duplicate
@@ -89,9 +89,11 @@ object SemDedup {
          |  node = MIN(r) AS keep
          |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_sem_dedup" -> (semDedup _))
-
-  val oracles: Map[String, String] = Map(
-    "sim_sem_dedup" -> semDedupSql)
+  val specs: Seq[QuerySpec] = Seq(
+    // the oracle form's 6-bit width gate refuses corpora past 2048
+    // vectors (pinned static SQL); Bench runs the auto-width production
+    // pipeline, which reuses sim_near_dup_lsh's pair memo
+    QuerySpec("sim_sem_dedup", semDedup, Some(semDedupSql),
+      benchForm = Some(semDedupScaled), eagerBuild = true,
+      memoFrom = Some("sim_near_dup_lsh")))
 }

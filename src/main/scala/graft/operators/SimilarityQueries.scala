@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.GraftFunctions.{cosine, dotProduct, l2Norm}
 
 /** Similarity search over the `embeddings` table (64-d float vectors).
@@ -399,21 +399,12 @@ object SimilarityQueries {
       |  FROM scored)
       |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_sq8_topk" -> (sq8TopK _),
-    "sim_cosine_topk" -> (cosineTopK _),
-    "sim_knn_label" -> (knnLabel _),
-    "sim_embedding_near_dup" -> (embeddingNearDup _),
-    "sim_label_stats" -> (labelStats _),
-    "sim_centroids" -> (embCentroids _),
-    "sim_kmeans_step" -> (kmeansStep _))
-
-  val oracles: Map[String, String] = Map(
-    "sim_sq8_topk" -> sq8TopKSql,
-    "sim_cosine_topk" -> cosineTopKSql,
-    "sim_knn_label" -> knnLabelSql,
-    "sim_embedding_near_dup" -> embeddingNearDupSql,
-    "sim_label_stats" -> labelStatsSql,
-    "sim_centroids" -> embCentroidsSql,
-    "sim_kmeans_step" -> kmeansStepSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("sim_sq8_topk", sq8TopK, Some(sq8TopKSql)),
+    QuerySpec("sim_cosine_topk", cosineTopK, Some(cosineTopKSql)),
+    QuerySpec("sim_knn_label", knnLabel, Some(knnLabelSql)),
+    QuerySpec("sim_embedding_near_dup", embeddingNearDup, Some(embeddingNearDupSql)),
+    QuerySpec("sim_label_stats", labelStats, Some(labelStatsSql)),
+    QuerySpec("sim_centroids", embCentroids, Some(embCentroidsSql)),
+    QuerySpec("sim_kmeans_step", kmeansStep, Some(kmeansStepSql)))
 }

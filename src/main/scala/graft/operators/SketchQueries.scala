@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.GraftFunctions.hexSliceLong
 
 /** Deterministic sketch operators. A sketch earns its keep at 100 TB
@@ -416,15 +416,12 @@ object SketchQueries {
       |    AS exact_price
       |FROM ranked WHERE rk = r - prev ORDER BY q""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t_cms_heavy_hitters" -> (cmsHeavyHitters _),
-    "t_distinct_sketch" -> (distinctSketch _),
-    "t_quantile_select" -> (quantileSelect _),
-    "join_bloom_prefilter" -> (bloomPrefilter _))
-
-  val oracles: Map[String, String] = Map(
-    "t_cms_heavy_hitters" -> cmsHeavyHittersSql,
-    "t_distinct_sketch" -> distinctSketchSql,
-    "t_quantile_select" -> quantileSelectSql,
-    "join_bloom_prefilter" -> bloomPrefilterSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("t_cms_heavy_hitters", cmsHeavyHitters, Some(cmsHeavyHittersSql)),
+    QuerySpec("t_distinct_sketch", distinctSketch, Some(distinctSketchSql)),
+    // construction runs the driver-side control jobs (bounds +
+    // histogram + sub-histogram: 3 corpus scans), not memoized
+    QuerySpec("t_quantile_select", quantileSelect, Some(quantileSelectSql),
+      eagerBuild = true),
+    QuerySpec("join_bloom_prefilter", bloomPrefilter, Some(bloomPrefilterSql)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Subquery-shaped relational operators: correlated aggregates, scalar
   * subqueries, IN/NOT-EXISTS decorrelation, aggregate-over-aggregate.
@@ -201,17 +201,10 @@ object SubqueryQueries {
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q2_min_cost_supplier" -> (q2MinCostSupplier _),
-    "q13_cust_distribution" -> (q13CustDistribution _),
-    "q15_top_supplier" -> (q15TopSupplier _),
-    "q18_large_orders" -> (q18LargeOrders _),
-    "q22_idle_balance" -> (q22IdleBalance _))
-
-  val oracles: Map[String, String] = Map(
-    "q2_min_cost_supplier" -> q2MinCostSupplierSql,
-    "q13_cust_distribution" -> q13CustDistributionSql,
-    "q15_top_supplier" -> q15TopSupplierSql,
-    "q18_large_orders" -> q18LargeOrdersSql,
-    "q22_idle_balance" -> q22IdleBalanceSql)
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q2_min_cost_supplier", q2MinCostSupplier, Some(q2MinCostSupplierSql)),
+    QuerySpec("q13_cust_distribution", q13CustDistribution, Some(q13CustDistributionSql)),
+    QuerySpec("q15_top_supplier", q15TopSupplier, Some(q15TopSupplierSql)),
+    QuerySpec("q18_large_orders", q18LargeOrders, Some(q18LargeOrdersSql)),
+    QuerySpec("q22_idle_balance", q22IdleBalance, Some(q22IdleBalanceSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 import graft.functions.GraftFunctions.{shinglesOfTokens, tokens}
 
 /** Text-analysis operators over the `documents` table: token counting,
@@ -194,7 +194,12 @@ object TextQueries {
     *
     * Scale: tf is one shuffle on (doc, word); df aggregates the tf
     * frame (word shuffle, already tiny); the ranking window shuffles
-    * on doc_id. No scan is repeated. */
+    * on doc_id. No scan is repeated.
+    *
+    * The returned plan reads a PERSISTED tf frame: the caller must
+    * release it after running the query (`spark.catalog.clearCache()`,
+    * as Bench and Verify do between queries), or its blocks pin
+    * storage memory for the rest of the session. */
   def tfidfTopK(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // CACHED: tf feeds two consumers (the ranking join's left side and
@@ -205,7 +210,7 @@ object TextQueries {
     // plans/r18/t_tfidf_topk_sf10_before.txt: two full
     // FileScan+explode+Exchange subtrees). Caching computes the
     // token-scale pass once; measured 0.85x warm at sf10, 3/3
-    // interleaved rounds (ProfileTextCache). Harness-scoped like
+    // interleaved rounds (commit 81a3e20). Harness-scoped like
     // [[DedupQueries.docShingleArrays]]: Bench/Verify clear caches per
     // query; at 100 TB the tf table is the standard materialized
     // intermediate.
@@ -698,15 +703,13 @@ object TextQueries {
       // tokenize+explode+shuffle pass (plan audit
       // plans/r18/t_quality_classifier_sf10_before.txt). Caching the
       // tiny aggregate drops one token-scale pass; measured 0.92x at
-      // sf10, 3/3 interleaved rounds (ProfileTextCache). Scoped to
+      // sf10, 3/3 interleaved rounds (commit 81a3e20). Scoped to
       // this branch only: the pruned branch already funnels counts
       // into ONE tagged-union model job whose exchange is planned
       // once. Harness-scoped cache, cleared by Bench/Verify per query.
       val countsC = counts
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val totalsC = countsC.agg(sum(col("c_t")).as("nt"),
-        sum(col("c_o")).as("no"), count(lit(1)).as("v"))
-      val w = countsC.crossJoin(broadcast(totalsC))
+      val w = countsC.crossJoin(broadcast(totals))
         .select(col("w"), weight(col("c_t"), col("c_o")).as("w_scaled"))
       toks.join(w, Seq("w"))
         .groupBy(col("doc_id"))
@@ -755,31 +758,28 @@ object TextQueries {
       |FROM toks JOIN wt USING (w) CROSS JOIN prior
       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t_quality_classifier" -> (qualityClassifier _),
-    "t_gopher_ngram" -> (gopherNgram _),
-    "t_lm_perplexity" -> (lmPerplexity _),
-    "t_tfidf_topk" -> (tfidfTopK _),
-    "t_token_count_bpe" -> (tokenCountBpe _),
-    "t_token_stats" -> (tokenStats _),
-    "t_quality_score" -> (qualityScore _),
-    "t_langid" -> (langId _),
-    "t_fingerprint" -> (fingerprint _),
-    "t_top_words_per_source" -> (topWordsPerSource _),
-    "t_bpe_pairs" -> (bpePairs _),
-    "t_pii_scrub" -> (piiScrub _))
-
-  val oracles: Map[String, String] = Map(
-    "t_quality_classifier" -> qualityClassifierSql,
-    "t_gopher_ngram" -> gopherNgramSql,
-    "t_lm_perplexity" -> lmPerplexitySql,
-    "t_tfidf_topk" -> tfidfTopKSql,
-    "t_token_count_bpe" -> tokenCountBpeSql,
-    "t_token_stats" -> tokenStatsSql,
-    "t_quality_score" -> qualityScoreSql,
-    "t_langid" -> langIdSql,
-    "t_fingerprint" -> fingerprintSql,
-    "t_top_words_per_source" -> topWordsPerSourceSql,
-    "t_bpe_pairs" -> bpePairsSql,
-    "t_pii_scrub" -> piiScrubSql)
+  val specs: Seq[QuerySpec] = Seq(
+    // Bench's _pruned twins set the topK confs at construction, which
+    // would otherwise leak into these exact forms on the next sweep or
+    // dir, so their bench forms pin the confs unset
+    QuerySpec("t_quality_classifier", qualityClassifier, Some(qualityClassifierSql),
+      benchForm = Some { (s, d) =>
+        s.conf.unset("spark.graft.nb.topK")
+        qualityClassifier(s, d)
+      }),
+    QuerySpec("t_gopher_ngram", gopherNgram, Some(gopherNgramSql)),
+    QuerySpec("t_lm_perplexity", lmPerplexity, Some(lmPerplexitySql),
+      benchForm = Some { (s, d) =>
+        s.conf.unset("spark.graft.lm.topK")
+        lmPerplexity(s, d)
+      }),
+    QuerySpec("t_tfidf_topk", tfidfTopK, Some(tfidfTopKSql)),
+    QuerySpec("t_token_count_bpe", tokenCountBpe, Some(tokenCountBpeSql)),
+    QuerySpec("t_token_stats", tokenStats, Some(tokenStatsSql)),
+    QuerySpec("t_quality_score", qualityScore, Some(qualityScoreSql)),
+    QuerySpec("t_langid", langId, Some(langIdSql)),
+    QuerySpec("t_fingerprint", fingerprint, Some(fingerprintSql)),
+    QuerySpec("t_top_words_per_source", topWordsPerSource, Some(topWordsPerSourceSql)),
+    QuerySpec("t_bpe_pairs", bpePairs, Some(bpePairsSql)),
+    QuerySpec("t_pii_scrub", piiScrub, Some(piiScrubSql)))
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
 
 /** Oracle-gated query wiring over [[BucketedTables]] (the write-side
   * co-location lever; rationale and plan-property specs live there /
@@ -98,9 +98,10 @@ object BucketedLayout {
       |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "layout_bucketed_join" -> (bucketedJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "layout_bucketed_join" -> bucketedJoinSql)
+  val specs: Seq[QuerySpec] = Seq(
+    // construction MATERIALIZES the bucketed copies: the write-side
+    // cost the co-location lever trades for is paid in the first timed
+    // repeat
+    QuerySpec("layout_bucketed_join", bucketedJoin, Some(bucketedJoinSql),
+      eagerBuild = true))
 }

@@ -2,18 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The streaming bench guard: probe/steal/history brackets around
-  * every measured leg (the batch sweep's discipline ported in r16).
+/** The host guard shared by the batch sweep and the streaming benches:
+  * probe/steal/history brackets around every measured leg.
   * These specs pin the pieces a contaminated-record postmortem would
   * lean on: the history file parses to the rates the tripwire
   * compares against, the stamp JSON is valid and self-describing, and
   * the flag folds together exactly the probe/steal/trip conditions
   * the artifact notes claim it does. */
-class StreamGuardSpec extends AnyFunSuite {
+class HostGuardSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("checked-in stream history parses to positive per-leg rates") {
-    val h = StreamGuard.history
+    val h = HostGuard.history
     // the repo file must keep the tripwire armed for the whole suite
     val expected = Seq("micro_1k", "micro_10k", "micro_100k",
       "er_stream", "rules_tws", "rules_foreach_batch", "order_tws",
@@ -32,7 +32,7 @@ class StreamGuardSpec extends AnyFunSuite {
       """{"source": "spec", "round": 17,
         |"rates": {"micro_1k": 86891, "er_stream": 244500},
         |"epilogue_count": 3}""".stripMargin
-    val m = StreamGuard.parseRates(txt)
+    val m = HostGuard.parseHistory(txt)
     assert(m == Map("micro_1k" -> 86891.0, "er_stream" -> 244500.0), m)
   }
 
@@ -40,15 +40,15 @@ class StreamGuardSpec extends AnyFunSuite {
     // r16 shipped an unflagged ~2x regression on a 13 s-history row
     // because [10 s, 30 s) rows only tripped at 3x — the band now
     // starts at 10 s (VERDICT r16 ask #2)
-    assert(Bench.tripRatioFor(5.0) == 3.0)
-    assert(Bench.tripRatioFor(9.99) == 3.0)
-    assert(Bench.tripRatioFor(10.0) == 1.4)
-    assert(Bench.tripRatioFor(13.26) == 1.4) // layout_bucketed_join sf10
-    assert(Bench.tripRatioFor(300.0) == 1.4)
+    assert(HostGuard.tripRatioFor(5.0) == 3.0)
+    assert(HostGuard.tripRatioFor(9.99) == 3.0)
+    assert(HostGuard.tripRatioFor(10.0) == 1.4)
+    assert(HostGuard.tripRatioFor(13.26) == 1.4) // layout_bucketed_join sf10
+    assert(HostGuard.tripRatioFor(300.0) == 1.4)
   }
 
   test("guarded run returns the result and a well-formed stamp") {
-    val ((r, stamp), _) = (StreamGuard.guarded(spark, "spec_leg") {
+    val ((r, stamp), _) = (HostGuard.guarded(spark, "spec_leg") {
       42
     }(_ => 1e9), ())
     assert(r == 42)
@@ -66,7 +66,7 @@ class StreamGuardSpec extends AnyFunSuite {
     // micro_1k has a real history entry; 1 row/s is < history/1.4, so
     // the guard must run the immediate arbitration probe (recorded in
     // trip_probe_sec) regardless of whether the box reads hot
-    val (_, stamp) = StreamGuard.guarded(spark, "micro_1k") {
+    val (_, stamp) = HostGuard.guarded(spark, "micro_1k") {
       ()
     }(_ => 1.0)
     assert(stamp.historyRps > 0)

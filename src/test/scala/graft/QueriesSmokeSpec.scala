@@ -1,9 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract smoke: entry yields rows; queries/oracles stay in
-  * sync; a representative query from each family runs at sf0.001. */
+  * sync; a representative query from each family runs at sf0.001; the
+  * bench row set and one filtered bench leg hold their shape. */
 class QueriesSmokeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
@@ -39,6 +43,62 @@ class QueriesSmokeSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"queries without oracle: $missing")
     val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(dangling.isEmpty, s"oracles without query: $dangling")
+  }
+
+  /** The bench row set is the catalogue plus Bench's bench-only rows,
+    * and Bench's per-row rules only point backwards in the sweep. */
+  test("bench rows are the 116 catalogue queries plus 7 bench-only rows") {
+    val names = Bench.rows.map(_.name)
+    assert(names.size == 123 && names.distinct.size == 123, names)
+    val benchOnly = Set("t_lm_perplexity_pruned", "t_quality_classifier_pruned",
+      "layout_bucketed_join_warm", "sim_ivfpq_baseline",
+      "sim_ivfpq_refine_wide", "sim_pq_adc_baseline",
+      "graph_pagerank_converged")
+    assert(SparkEntry.queries.size == 116)
+    assert(names.toSet == SparkEntry.queries.keySet ++ benchOnly)
+    Bench.rows.foreach { q =>
+      q.memoFrom.foreach { p =>
+        assert(names.contains(p) && p < q.name,
+          s"${q.name}: memo provider $p does not sort before it")
+      }
+    }
+    val oracled = Bench.rows.filter(q => benchOnly(q.name) && q.oracle.nonEmpty)
+    assert(oracled.isEmpty, s"bench-only rows with an oracle: ${oracled.map(_.name)}")
+  }
+
+  /** One filtered bench leg end to end: the rows the filter selects
+    * are exactly the rows the summary line and the full record report,
+    * and the catalogue's eagerBuild rule reaches the repeat count. */
+  test("runLeg reports exactly the filtered rows, error-free, eager rows once") {
+    val picked = Set("dedup_clusters", "pipeline_keep", "sim_pq_adc_topk")
+    val out = java.nio.file.Files.createTempDirectory("bench-leg")
+    val fullPath = out.resolve("bench_full.json").toString
+    val buf = new java.io.ByteArrayOutputStream()
+    try {
+      Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+        Bench.runLeg(spark, picked, repeats = 2, dir, fullPath, filtered = true)
+      }
+      val mapper = new ObjectMapper()
+      val printed = buf.toString("UTF-8").linesIterator.filter(_.nonEmpty).toSeq
+      val summary = mapper.readTree(printed.last)
+      val full = mapper.readTree(new java.io.File(fullPath))
+      def names(n: JsonNode): Set[String] = n.fieldNames().asScala.toSet
+
+      assert(names(full.get("queries")) == picked)
+      assert(names(full.get("reps")) == picked)
+      assert(summary.get("n").asInt == picked.size)
+      assert(summary.get("errors").isEmpty && full.get("errors").isEmpty,
+        s"errors: ${full.get("errors")}")
+      val eager = Bench.rows.filter(q => picked(q.name) && q.eagerBuild)
+      assert(eager.map(_.name).toSet == picked)
+      eager.foreach { q =>
+        assert(full.get("reps").get(q.name).asInt == 1,
+          s"${q.name} ran ${full.get("reps").get(q.name)} repeats")
+      }
+    } finally {
+      out.toFile.listFiles().foreach(_.delete())
+      out.toFile.delete()
+    }
   }
 
   /** Full-inventory schema gate: ANALYZE every registered query against

@@ -26,6 +26,12 @@ class GraphAqeScopeSpec extends AnyFunSuite {
     } finally spark.conf.unset(LoopKey)
   }
 
+  test("loopAqe accepts upper-case booleans, like Spark's own confs") {
+    spark.conf.set(LoopKey, "TRUE")
+    try GraphQueries.pageRankConverged(spark, dir, maxIters = 2).release()
+    finally spark.conf.unset(LoopKey)
+  }
+
   test("restore leaves an explicitly-set adaptive.enabled at its value") {
     spark.conf.set(AqeKey, "true")
     try {

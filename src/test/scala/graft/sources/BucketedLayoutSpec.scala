@@ -47,19 +47,36 @@ class BucketedLayoutSpec extends AnyFunSuite {
     }
   } }
 
+  /** A copy of the fixture whose orders and lineitem share one mtime,
+    * as after a fresh checkout: the two bucketed copies must still land
+    * in distinct scratch dirs. */
+  private lazy val equalMtimeDir: String = {
+    val copy = java.nio.file.Files.createTempDirectory("graft-equal-mtime")
+    copy.toFile.deleteOnExit()
+    Seq("orders", "lineitem").foreach { t =>
+      val f = copy.resolve(s"$t.parquet")
+      java.nio.file.Files.copy(java.nio.file.Paths.get(dir, s"$t.parquet"), f)
+      f.toFile.setLastModified(1700000000000L)
+      f.toFile.deleteOnExit()
+    }
+    copy.toString
+  }
+
   test("bucketed rollup equals the raw-parquet rollup") { pinned {
-    val viaBuckets = BucketedLayout.bucketedJoin(spark, dir).collect()
-    val dec = "decimal(18,2)"
-    val raw = Tables.orders(spark, dir).join(Tables.lineitem(spark, dir),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_items"),
-        sum(col("l_extendedprice").cast(dec) *
-            (lit(1).cast(dec) - col("l_discount").cast(dec)))
-          .cast("double").as("revenue"))
-      .orderBy(col("o_orderpriority"))
-      .collect()
-    assert(viaBuckets.toSeq === raw.toSeq)
+    Seq(dir, equalMtimeDir).foreach { d =>
+      val viaBuckets = BucketedLayout.bucketedJoin(spark, d).collect()
+      val dec = "decimal(18,2)"
+      val raw = Tables.orders(spark, d).join(Tables.lineitem(spark, d),
+          col("o_orderkey") === col("l_orderkey"))
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n_items"),
+          sum(col("l_extendedprice").cast(dec) *
+              (lit(1).cast(dec) - col("l_discount").cast(dec)))
+            .cast("double").as("revenue"))
+        .orderBy(col("o_orderpriority"))
+        .collect()
+      assert(raw.nonEmpty && viaBuckets.toSeq === raw.toSeq, d)
+    }
   } }
 
   test("each bucket is a single file per side") { pinned {

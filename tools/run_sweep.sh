@@ -7,8 +7,8 @@
 # guest-visible steal) — per-leg heap re-allocation contaminated whole
 # legs, while already-resident memory runs at full speed. The per-leg
 # calibration probes (calib_sec / calib_end_sec in each record) are the
-# degradation tripwire; a leg past SPARK_GRAFT_CALIB_LIMIT (default
-# 10 s) self-reports coload.flagged=true.
+# degradation tripwire; a leg whose probe reads past graft.HostGuard's
+# 10 s limit self-reports coload.flagged=true.
 #
 # Produces /tmp/bench_sf{01,1,10}_<runid>.json — the run id defaults to
 # the epoch second so repeated sweeps can never silently clobber an

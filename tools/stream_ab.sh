@@ -8,7 +8,7 @@
 # cur_10k, ...) so a slow host drift hits both builds symmetrically;
 # one fresh pre-touched JVM per leg (the r16c micro-only protocol);
 # a CLI calibration probe between every pair bounds the window's
-# health. The current build's legs also carry their own StreamGuard
+# health. The current build's legs also carry their own HostGuard
 # stamps; the r14 build predates the guard, so its legs are bracketed
 # only by the script's probes.
 #
